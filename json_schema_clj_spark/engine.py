@@ -12,13 +12,15 @@ the distributed surface:
     compile(schema)                     reusable one-doc validator
     validate_table(df, schema, ...)     typed DataFrame → Column backend
     validate_json_column(df, schema)    JSON-string column → hybrid:
-                                        Column backend over from_json when
-                                        the schema is Column-compilable,
-                                        else the Arrow-batched Python
-                                        backend
-    register_keyword(...)               extension surface on BOTH backends
-                                        (the schema-key multimethod analog,
-                                        core.clj:132-134)
+                                        Variant backend when the schema
+                                        compiles over a VariantView, else
+                                        the Arrow-batched Python backend
+    register_keyword(...)               extension surface on the Column and
+                                        Python backends (the schema-key
+                                        multimethod analog,
+                                        core.clj:132-134); on the auto JSON
+                                        path a Column-target keyword falls
+                                        back to Python
 """
 
 from __future__ import annotations
@@ -95,7 +97,7 @@ def validate_json_column(
        JSON type, so `schema_of_variant` gives exact type dispatch and the
        whole check tree stays pure Catalyst.  Used whenever the schema
        compiles on the variant backend (no $data, bounded $ref, scalar
-       enum/const members).
+       enum/const members, no Column-target custom keyword).
     2. **python** — the Arrow-batched interpreter, full conformance for
        everything else.
 
@@ -105,9 +107,8 @@ def validate_json_column(
     reference fails.  `force_backend="variant"|"python"` pin a backend.
     """
     if force_backend in (None, "variant"):
-        from .plans.compiler import _registry_fingerprint
-        from .plans.ir import VIOLATION_TYPE  # noqa: F401
-        from .plans.variant_compiler import VARIANT_COMPILERS, compile_for_json
+        from .plans.compiler import KEYWORD_COMPILERS, _registry_fingerprint
+        from .plans.variant_compiler import compile_for_json
 
         try:
             # parse ONCE in a dedicated projection: the non-cheap parse stays
@@ -123,7 +124,7 @@ def validate_json_column(
                     json.dumps(schema, sort_keys=True),
                     json_col,
                     json.dumps(config, sort_keys=True) if config else "",
-                    _registry_fingerprint(VARIANT_COMPILERS),
+                    _registry_fingerprint(KEYWORD_COMPILERS),
                 )
             except TypeError:
                 key = None
@@ -185,7 +186,9 @@ def validate_json_column(
 def register_keyword(name: str, column_compiler: Optional[Callable] = None,
                      python_compiler: Optional[Callable] = None):
     """Open keyword registration on both backends — the analog of adding a
-    schema-key defmethod (core.clj:134)."""
+    schema-key defmethod (core.clj:134).  `column_compiler` receives the
+    typed target Column of the struct view; a Variant value has none, so
+    schemas using the keyword run on the Python backend there."""
     if column_compiler is not None:
         _col_compiler.KEYWORD_COMPILERS[name] = column_compiler
     if python_compiler is not None:

@@ -88,6 +88,22 @@ def path_col(segments: Sequence[PathSeg]) -> Column:
     return F.array(*out)
 
 
+def _violation_struct(
+    keyword_path: Sequence[str],
+    instance_path: Sequence[PathSeg],
+    keyword: str,
+    message: Union[str, Column],
+    severity: str,
+) -> Column:
+    return F.struct(
+        F.array(*[F.lit(s) for s in keyword_path]).alias("keyword_path"),
+        path_col(instance_path).alias("instance_path"),
+        F.lit(keyword).alias("keyword"),
+        (message if isinstance(message, Column) else F.lit(message)).alias("message"),
+        F.lit(severity).alias("severity"),
+    )
+
+
 def violation(
     keyword_path: Sequence[str],
     instance_path: Sequence[PathSeg],
@@ -96,16 +112,7 @@ def violation(
     severity: str,
 ) -> Column:
     """A one-element array<violation>."""
-    msg = message if isinstance(message, Column) else F.lit(message)
-    return F.array(
-        F.struct(
-            F.array(*[F.lit(s) for s in keyword_path]).alias("keyword_path"),
-            path_col(instance_path).alias("instance_path"),
-            F.lit(keyword).alias("keyword"),
-            msg.alias("message"),
-            F.lit(severity).alias("severity"),
-        )
-    )
+    return F.array(_violation_struct(keyword_path, instance_path, keyword, message, severity))
 
 
 def simple_check(
@@ -121,23 +128,13 @@ def simple_check(
     The analog of one reference validator closure calling add-error
     (core.clj:42-45).
     """
-    viol = F.when(ok, _typed_empty_array()).otherwise(
-        violation(keyword_path, instance_path, keyword, message, severity)
-    )
+    record = _violation_struct(keyword_path, instance_path, keyword, message, severity)
+    viol = F.when(ok, _typed_empty_array()).otherwise(F.array(record))
     # Emit unless ok is literally true: under SQL three-valued logic a NULL
     # ok (possible for custom register_keyword checks) must count as a
     # failure, matching the violations branch — `~ok` alone would yield
     # NULL, and merge's isNotNull filter would silently drop the violation.
-    unit = F.when(
-        ~F.coalesce(ok, F.lit(False)),
-        F.struct(
-            F.array(*[F.lit(s) for s in keyword_path]).alias("keyword_path"),
-            path_col(instance_path).alias("instance_path"),
-            F.lit(keyword).alias("keyword"),
-            (message if isinstance(message, Column) else F.lit(message)).alias("message"),
-            F.lit(severity).alias("severity"),
-        ),
-    )
+    unit = F.when(~F.coalesce(ok, F.lit(False)), record)
     # ok is coalesced to False here, not just in the unit/violations
     # branches: a NULL ok (possible for custom register_keyword checks)
     # otherwise propagates through merge's conjunction into
@@ -177,22 +174,6 @@ def merge(compiled: Sequence[Compiled]) -> Compiled:
     return Compiled(ok=ok, violations=viols, unit=unit)
 
 
-def guard_null(target: Column, inner: Compiled) -> Compiled:
-    """Property-level null guard: subschemas only apply when the value is
-    present AND non-nil (reference `properties`, core.clj:367-389)."""
-    if inner.empty:
-        return Compiled(
-            ok=F.when(target.isNull(), F.lit(True)).otherwise(inner.ok),
-            violations=_typed_empty_array(),
-            empty=True,
-        )
-    return Compiled(
-        ok=F.when(target.isNull(), F.lit(True)).otherwise(inner.ok),
-        violations=F.when(target.isNull(), _typed_empty_array()).otherwise(inner.violations),
-        unit=F.when(target.isNotNull(), inner.unit) if inner.unit is not None else None,
-    )
-
-
 @dataclass(frozen=True)
 class Ctx:
     """Compile-time context threaded through keyword compilers — the analog of
@@ -217,14 +198,6 @@ class Ctx:
 
     def severity(self, keyword: str) -> str:
         return "warning" if self.config.get(keyword) in ("warnings", "warning") else "error"
-
-    def down(self, key: str, col_seg: PathSeg, dtype: Optional[T.DataType]) -> "Ctx":
-        return replace(
-            self,
-            schema_path=self.schema_path + (key,),
-            instance_path=self.instance_path + (col_seg,),
-            dtype=dtype,
-        )
 
     def at_keyword(self, keyword: str) -> "Ctx":
         return replace(self, schema_path=self.schema_path + (keyword,))

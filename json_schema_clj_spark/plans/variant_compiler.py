@@ -1,14 +1,18 @@
-"""Schema → Column compiler over Spark 4 VariantType — dynamic JSON
-validation as pure Catalyst, no Python in the loop.
+"""The Variant view: dynamic JSON validation as pure Catalyst, no Python in
+the loop.
 
-Where the struct-based compiler (plans/compiler.py) needs a known Spark
-shape, this backend validates ARBITRARY JSON: ``parse_json`` keeps every
-value's runtime type, ``schema_of_variant`` is the per-value type dispatch
-(the Column analog of the reference's clojure type predicates,
+Where the struct view (plans/compiler.py) needs a known Spark shape, this
+view validates ARBITRARY JSON: ``parse_json`` keeps every value's runtime
+type, ``schema_of_variant`` is the per-value type dispatch (the Column
+analog of the reference's clojure type predicates,
 /root/reference/src/json_schema/core.clj:183-348), ``try_variant_get``
-casts guarded by that dispatch extract typed views, and
+casts guarded by that dispatch extract typed reads, and
 ``map<string,variant>`` / ``array<variant>`` casts expose objects and
 arrays to the ordinary higher-order functions.
+
+This module holds only the view (:class:`VariantView`) and the entry
+points: every keyword is compiled by the one registry in
+plans/compiler.py, which serves both views.
 
 Parity notes / scope:
 * JSON numbers: ``1`` → BIGINT (integer), ``1.0`` → DECIMAL (number, NOT
@@ -25,1031 +29,213 @@ Parity notes / scope:
   every nesting depth and duplicates differing only in key order ARE
   detected — Clojure ``=`` map semantics, pinned by
   tests/test_variant_backend.py::test_unique_items_object_key_order.
-* ``$data`` and unbounded ``$ref`` recursion → unsupported (fallback).
+* ``$data``, unbounded ``$ref`` recursion and keywords registered for
+  Column targets (:func:`~.compiler.register_keyword`) → unsupported
+  (fallback).
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import replace
-from decimal import Decimal
-from typing import Any, Callable, Optional
+from typing import Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions import formats
-from .compiler import (
-    ColumnBackendUnsupported,
-    _i64_guard,
-    _op_sym,
-    _resolve_schema_pointer,
-)
-from .ir import Compiled, Ctx, merge, simple_check, violation
-
-VARIANT_COMPILERS: dict[str, Callable] = {}
-
-NOOPS = {
-    "title", "description", "$schema", "id", "$id", "default", "definitions",
-    "then", "else", "additionalItems", "exclusiveFormatMaximum",
-    "exclusiveFormatMinimum",
-}
-
-
-def register(name: str):
-    def deco(fn):
-        VARIANT_COMPILERS[name] = fn
-        return fn
-
-    return deco
-
-
-def _empty() -> Column:
-    from .ir import _typed_empty_array
-
-    return _typed_empty_array()
-
-
-# --- typed views -----------------------------------------------------------
-
-
-def vtype(v: Column) -> Column:
-    """Per-value type tag: VOID/BOOLEAN/BIGINT/DECIMAL.../DOUBLE/STRING/
-    OBJECT<...>/ARRAY<...>; SQL NULL for an absent value."""
-    return F.schema_of_variant(v)
-
-
-def is_string(v: Column) -> Column:
-    return vtype(v) == F.lit("STRING")
-
-
-def is_bool(v: Column) -> Column:
-    return vtype(v) == F.lit("BOOLEAN")
-
-
-def is_integer(v: Column) -> Column:
-    return vtype(v) == F.lit("BIGINT")
-
-
-def is_number(v: Column) -> Column:
-    t = vtype(v)
-    return (t == "BIGINT") | t.startswith("DECIMAL") | (t == "DOUBLE") | (t == "FLOAT")
-
-
-def is_object(v: Column) -> Column:
-    return vtype(v).startswith("OBJECT")
-
-
-def is_array(v: Column) -> Column:
-    return vtype(v).startswith("ARRAY")
-
-
-def is_null_value(v: Column) -> Column:
-    """JSON null (present); absent values are SQL NULL."""
-    return vtype(v) == F.lit("VOID")
-
-
-def present(v: Column) -> Column:
-    """Present AND not JSON null — has-property? semantics
-    (core.clj:852-854: nil counts as missing)."""
-    return v.isNotNull() & ~is_null_value(v)
-
-
-def as_string(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "string")
-
-
-def as_double(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "double")
-
-
-def as_decimal(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "decimal(38,10)")
-
-
-def as_long(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "bigint")
-
-
-def as_bool(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "boolean")
-
-
-def as_map(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "map<string,variant>")
-
-
-def as_array(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "array<variant>")
-
-
-def get_field(v: Column, key: str) -> Column:
-    return F.element_at(as_map(v), F.lit(key))
-
-
-# --- equality (json-compare, core.clj:472-478: strict numeric identity) ----
-
-
-def scalar_eq(v: Column, member) -> Column:
-    if member is None:
-        return is_null_value(v)
-    if isinstance(member, bool):
-        return is_bool(v) & (as_bool(v) == F.lit(member))
-    if isinstance(member, int):
-        return is_integer(v) & (as_long(v) == F.lit(_i64_guard(member)))
-    if isinstance(member, float):
-        return (is_number(v) & ~is_integer(v)) & (as_double(v) == F.lit(member))
-    if isinstance(member, str):
-        return is_string(v) & (as_string(v) == F.lit(member))
-    raise ColumnBackendUnsupported(f"non-scalar literal {member!r} on the variant backend")
-
-
-# --- type keyword -----------------------------------------------------------
-
-
-def _variant_type_ok(tname, v: Column, ctx: Ctx):
-    if isinstance(tname, (dict, bool)):
-        return compile_variant(tname, v, ctx).ok
-    t = str(tname)
-    if t == "any":
-        return F.lit(True)
-    if t in ("null", "nil"):
-        return is_null_value(v) | v.isNull()
-    if t == "string":
-        # str/blank? semantics: ANY-whitespace-only is blank (Spark trim
-        # strips only 0x20, so "\t\n" needs the whitespace class)
-        return is_string(v) & ~as_string(v).rlike(r"^\s*$")
-    if t == "boolean":
-        return is_bool(v)
-    if t == "number":
-        return is_number(v)
-    if t == "integer":
-        return is_integer(v)
-    if t == "object":
-        return is_object(v)
-    if t == "array":
-        return is_array(v)
-    if t in formats.TYPE_REGEX:
-        base = is_string(v) & as_string(v).rlike(formats.TYPE_REGEX[t])
-        if t == "uri":
-            base = base & ~as_string(v).rlike(r"^\s*$")
-        return base
-    return None
-
-
-@register("type")
-def _v_type(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    sev = ctx.severity("type")
-    members = value if isinstance(value, list) else [value]
-    oks = []
-    for m in members:
-        ok = _variant_type_ok(m, v, ctx)
-        if ok is None:
-            return simple_check(
-                F.lit(False), ctx.schema_path, ctx.instance_path, "type",
-                f"Broken schema: unknown type {m}", sev,
-            )
-        oks.append(ok)
-    ok_all = oks[0]
-    for o in oks[1:]:
-        ok_all = ok_all | o
-    if isinstance(value, list):
-        msg: Any = f"expected one of types {', '.join(str(m) for m in members)}"
-    elif value == "string":
-        msg = F.when(
-            is_string(v) & F.coalesce(as_string(v), F.lit("")).rlike(r"^\s*$"),
-            F.lit("expected not empty string"),
-        ).otherwise(F.lit("expected type of string"))
-    else:
-        msg = f"expected {value}"
-    return simple_check(ok_all, ctx.schema_path, ctx.instance_path, "type", msg, sev)
-
-
-# --- enum / const -----------------------------------------------------------
-
-
-@register("enum")
-def _v_enum(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    if isinstance(value, dict):
-        raise ColumnBackendUnsupported("$data enum on the variant backend")
-    ok = F.lit(False)
-    for m in value:
-        ok = ok | scalar_eq(v, m)
-    msg = "expected one of " + ", ".join(str(m) for m in value)
-    return simple_check(ok, ctx.schema_path, ctx.instance_path, "enum", msg, ctx.severity("enum"))
-
-
-def _v_const(kw):
-    def fn(value, schema, v: Column, ctx: Ctx) -> Compiled:
-        if isinstance(value, dict) and "$data" in value:
-            raise ColumnBackendUnsupported("$data const on the variant backend")
-        ok = scalar_eq(v, value)
-        return simple_check(
-            ok, ctx.schema_path, ctx.instance_path, kw,
-            F.concat(F.lit(f"expected {json.dumps(value)}, but "), F.coalesce(F.to_json(v), F.lit("null"))),
-            ctx.severity(kw),
-        )
-
-    return fn
-
-
-VARIANT_COMPILERS["const"] = _v_const("const")
-VARIANT_COMPILERS["constant"] = _v_const("constant")
-
-
-# --- comparators -------------------------------------------------------------
-
-
-def _v_comparator(keyword: str, op: str, applicable, value_expr, bound_check, message=""):
-    def fn(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-        if isinstance(value, dict):
-            raise ColumnBackendUnsupported(f"$data {keyword} on the variant backend")
-        sev = ctx.severity(keyword)
-        eff_op = op
-        exclusive = None
-        if keyword in ("minimum", "maximum"):
-            exclusive = schema.get("exclusive" + keyword.capitalize())
-        elif keyword in ("formatMinimum", "formatMaximum"):
-            exclusive = schema.get("exclusiveFormat" + keyword[6:])
-        if isinstance(exclusive, dict):
-            raise ColumnBackendUnsupported("$data exclusive flag on the variant backend")
-        if exclusive is True:
-            eff_op = {"ge": "gt", "le": "lt"}[op]
-        if value is None or not bound_check(value):
-            return simple_check(
-                F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                f" could not compare with {value}", sev,
-            ) if value is not None else None
-        if exclusive is not None and not isinstance(exclusive, bool):
-            # broken draft-4 flag (e.g. numeric exclusiveMaximum riding a
-            # maximum): EVERY value errors, before value-applicability
-            # (core.clj:116-117)
-            return simple_check(
-                F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                f"exclusive flag should be boolean, got {exclusive}", sev,
-            )
-        cv = value_expr(v)
-        b = F.lit(_i64_guard(value))
-        cmpc = {"ge": cv >= b, "gt": cv > b, "le": cv <= b, "lt": cv < b}[eff_op]
-        ok = F.when(~applicable(v) | v.isNull(), F.lit(True)).otherwise(cmpc)
-        msg = F.concat(F.lit(f"expected{message} "), cv.cast("string"),
-                       F.lit(f" {_op_sym(eff_op)} {value}"))
-        return simple_check(ok, ctx.schema_path, ctx.instance_path, keyword, msg, sev)
-
-    return fn
-
-
-def _is_num_py(x):
-    return isinstance(x, (int, float)) and not isinstance(x, bool)
-
-
-VARIANT_COMPILERS["minimum"] = _v_comparator("minimum", "ge", is_number, as_double, _is_num_py)
-VARIANT_COMPILERS["maximum"] = _v_comparator("maximum", "le", is_number, as_double, _is_num_py)
-VARIANT_COMPILERS["minLength"] = _v_comparator(
-    "minLength", "ge", is_string, lambda v: F.length(as_string(v)), _is_num_py, " string length"
-)
-VARIANT_COMPILERS["maxLength"] = _v_comparator(
-    "maxLength", "le", is_string, lambda v: F.length(as_string(v)), _is_num_py, " string length"
-)
-VARIANT_COMPILERS["minItems"] = _v_comparator(
-    "minItems", "ge", is_array, lambda v: F.size(as_array(v)), _is_num_py, " array length"
-)
-VARIANT_COMPILERS["maxItems"] = _v_comparator(
-    "maxItems", "le", is_array, lambda v: F.size(as_array(v)), _is_num_py, " array length"
-)
-VARIANT_COMPILERS["minProperties"] = _v_comparator(
-    "minProperties", "ge", is_object, lambda v: F.size(as_map(v)), _is_num_py, " number of properties"
-)
-VARIANT_COMPILERS["maxProperties"] = _v_comparator(
-    "maxProperties", "le", is_object, lambda v: F.size(as_map(v)), _is_num_py, " number of properties"
-)
-def _v_format_bound(keyword, op):
-    """formatMinimum/Maximum with the per-format coercion: time values get
-    their zone suffix stripped before comparison (compile-format-coerce,
-    core.clj:1093-1109); format 'unknown' compiles to nothing."""
-
-    def fn(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-        fmt = schema.get("format")
-        if fmt == "unknown":
+from .compiler import ColumnBackendUnsupported, _compile, _i64_guard, _is_data, _unless
+from .ir import Compiled, Ctx, _typed_empty_array, simple_check
+
+
+class VariantView:
+    """A ``VariantType`` value.  Nothing is known about it statically, so
+    every predicate is a runtime ``schema_of_variant`` test.  Each derived
+    Column is built at most once per view: Column construction is Py4J
+    traffic, and keywords share the type tag and the typed reads."""
+
+    dtype = None
+
+    def __init__(self, col: Column):
+        self.col = col
+        self._memo: dict = {}
+
+    def _once(self, key, build) -> Column:
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
+
+    def _get(self, sql_type: str) -> Column:
+        return self._once(sql_type, lambda: F.try_variant_get(self.col, "$", sql_type))
+
+    def _tag(self) -> Column:
+        """Per-value type tag: VOID/BOOLEAN/BIGINT/DECIMAL.../DOUBLE/STRING/
+        OBJECT<...>/ARRAY<...>; SQL NULL for an absent value."""
+        return self._once("tag", lambda: F.schema_of_variant(self.col))
+
+    def _json_null(self) -> Column:
+        """JSON null (present); absent values are SQL NULL."""
+        return self._once("void", lambda: self._tag() == F.lit("VOID"))
+
+    # -- type predicates --------------------------------------------------
+
+    def is_type(self, jtype: str) -> Optional[Column]:
+        def build():
+            t = self._tag()
+            if jtype == "null":
+                return self._json_null() | self.col.isNull()
+            if jtype == "string":
+                return t == F.lit("STRING")
+            if jtype == "boolean":
+                return t == F.lit("BOOLEAN")
+            if jtype == "integer":
+                return t == F.lit("BIGINT")
+            if jtype == "number":
+                return (t == "BIGINT") | t.startswith("DECIMAL") | (t == "DOUBLE") | (t == "FLOAT")
+            if jtype == "object":
+                return t.startswith("OBJECT")
+            if jtype == "array":
+                return t.startswith("ARRAY")
             return None
-        if fmt == "time":
-            def coerced(vv):
-                return F.regexp_replace(as_string(vv), r"(Z|[+-]\d+:\d+)$", "")
 
-            bound = __import__("re").sub(r"(Z|[+-]\d+:\d+)$", "", value) if isinstance(value, str) else value
-            inner = _v_comparator(keyword, op, is_string, coerced,
-                                  lambda b: isinstance(b, str), " value")
-            return inner(bound, schema, v, ctx)
-        return _v_comparator(keyword, op, is_string, as_string,
-                             lambda b: isinstance(b, str), " value")(value, schema, v, ctx)
-
-    return fn
-
-
-VARIANT_COMPILERS["formatMinimum"] = _v_format_bound("formatMinimum", "ge")
-VARIANT_COMPILERS["formatMaximum"] = _v_format_bound("formatMaximum", "le")
-
-
-def _v_exclusive(keyword, op, absorbed_by):
-    def fn(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-        if absorbed_by in schema:
-            return None
-        if isinstance(value, bool):
-            # bare draft-4 flag, no absorbing bound: boolean bound fails
-            # bound-applicability on every value (core.clj:1006-1023,113-114)
-            return simple_check(
-                F.lit(False), ctx.schema_path, ctx.instance_path, keyword,
-                f" could not compare with {str(value).lower()}", ctx.severity(keyword),
-            )
-        return _v_comparator(keyword, op, is_number, as_double, _is_num_py)(
-            value, schema, v, ctx
-        )
-
-    return fn
-
-
-VARIANT_COMPILERS["exclusiveMinimum"] = _v_exclusive("exclusiveMinimum", "gt", "minimum")
-VARIANT_COMPILERS["exclusiveMaximum"] = _v_exclusive("exclusiveMaximum", "lt", "maximum")
-
-
-def _v_multiple(kw, verb):
-    def fn(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-        if isinstance(value, dict):
-            raise ColumnBackendUnsupported(f"$data {kw} on the variant backend")
-        if not _is_num_py(value):
-            return None
-        sev = ctx.severity(kw)
-        if abs(value) >= 10**28:
-            # DecimalType(38,10) holds 28 integral digits (see the struct
-            # compiler's multipleOf guard)
-            raise ColumnBackendUnsupported(
-                f"{kw} bound beyond 28 digits on the variant backend"
-            )
-        dec = as_decimal(v)
-        bdec = F.lit(Decimal(str(value))).cast(T.DecimalType(38, 10))
-        sign_ok = (dec >= 0) if value >= 0 else (dec <= 0)
-        if value == 0:
-            # zero divisor: only v == 0 passes (_is_divider: d == 0 -> False);
-            # avoids ANSI REMAINDER_BY_ZERO from the % below
-            body = dec == F.lit(0)
-        else:
-            body = (dec == F.lit(0)) | (sign_ok & (dec % bdec == F.lit(0)))
-        ok = F.when(~is_number(v) | v.isNull(), F.lit(True)).otherwise(body)
-        msg = F.concat(F.lit("expected "), F.coalesce(F.to_json(v), F.lit("null")),
-                       F.lit(f" is {verb} {value}"))
-        return simple_check(ok, ctx.schema_path, ctx.instance_path, kw, msg, sev)
-
-    return fn
-
-
-VARIANT_COMPILERS["multipleOf"] = _v_multiple("multipleOf", "multiple of")
-VARIANT_COMPILERS["divisibleBy"] = _v_multiple("divisibleBy", "divisible by")
-
-
-@register("pattern")
-def _v_pattern(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    if isinstance(value, dict):
-        raise ColumnBackendUnsupported("$data pattern on the variant backend")
-    s = as_string(v)
-    ok = F.when(~is_string(v) | v.isNull(), F.lit(True)).otherwise(s.rlike(value))
-    msg = F.concat(F.lit("expected "), F.coalesce(s, F.lit("null")), F.lit(f" matches {value}"))
-    return simple_check(ok, ctx.schema_path, ctx.instance_path, "pattern", msg, ctx.severity("pattern"))
-
-
-@register("format")
-def _v_format(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    if isinstance(value, dict):
-        raise ColumnBackendUnsupported("$data format on the variant backend")
-    fmt = str(value)
-    s = as_string(v)
-    ok = formats.format_ok(s, fmt)
-    if ok is None:
-        if fmt in formats.FUNCTIONAL_FORMATS:
-            raise ColumnBackendUnsupported(f"format {fmt!r} on the variant backend")
-        return simple_check(
-            F.lit(False), ctx.schema_path, ctx.instance_path, "format",
-            f"Unknown format {fmt}", ctx.severity("format"),
-        )
-    ok = F.when(~is_string(v) | v.isNull(), F.lit(True)).otherwise(ok)
-    return simple_check(
-        ok, ctx.schema_path, ctx.instance_path, "format", f"expected format {fmt}",
-        ctx.severity("format"),
-    )
-
-
-# --- object keywords ---------------------------------------------------------
-
-
-def _object_guard(v: Column, inner: Compiled) -> Compiled:
-    return Compiled(
-        ok=F.when(~is_object(v) | v.isNull(), F.lit(True)).otherwise(inner.ok),
-        violations=F.when(~is_object(v) | v.isNull(), _empty()).otherwise(inner.violations),
-    )
-
-
-@register("properties")
-def _v_properties(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-    if not isinstance(value, dict):
-        return None
-    comps = []
-    for key, sub in value.items():
-        # draft-3 {required: true} hoisting (core.clj:375-380)
-        if isinstance(sub, dict) and sub.get("required") is True:
-            sub = {k: s for k, s in sub.items() if k != "required"}
-            comps.append(
-                simple_check(
-                    present(get_field(v, key)),
-                    ctx.schema_path + (key, "required"),
-                    ctx.instance_path,
-                    "required",
-                    f"Property {key} is required",
-                    ctx.severity("required"),
-                )
-            )
-        child_v = get_field(v, key)
-        child = compile_variant(
-            sub,
-            child_v,
-            replace(ctx, schema_path=ctx.schema_path + (key,),
-                    instance_path=ctx.instance_path + (key,)),
-        )
-        # applied only when present and non-nil (core.clj:367-389)
-        comps.append(
-            Compiled(
-                ok=F.when(~present(child_v), F.lit(True)).otherwise(child.ok),
-                violations=F.when(~present(child_v), _empty()).otherwise(child.violations),
-            )
-        )
-    return _object_guard(v, merge(comps))
-
-
-@register("required")
-def _v_required(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-    if isinstance(value, bool):
-        return None
-    if isinstance(value, dict):
-        raise ColumnBackendUnsupported("$data required on the variant backend")
-    comps = [
-        simple_check(
-            present(get_field(v, key)), ctx.schema_path, ctx.instance_path,
-            "required", f"Property {key} is required", ctx.severity("required"),
-        )
-        for key in value
-    ]
-    return _object_guard(v, merge(comps))
-
-
-@register("dependencies")
-def _v_dependencies(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    comps = []
-    for key, dep in value.items():
-        has = get_field(v, key).isNotNull()  # presence incl. JSON null
-        if isinstance(dep, str):
-            dep = [dep]
-        if isinstance(dep, list):
-            for d in dep:
-                comps.append(
-                    simple_check(
-                        ~has | get_field(v, d).isNotNull(),
-                        ctx.schema_path + (key,), ctx.instance_path, "dependencies",
-                        f"Property {d} is required", ctx.severity("dependencies"),
-                    )
-                )
-        else:
-            child = compile_variant(dep, v, replace(ctx, schema_path=ctx.schema_path + (key,)))
-            comps.append(
-                Compiled(
-                    ok=~has | child.ok,
-                    violations=F.when(has, child.violations).otherwise(_empty()),
-                )
-            )
-    return _object_guard(v, merge(comps))
-
-
-@register("patternProperties")
-def _v_pattern_properties(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    comps = []
-
-    def make_entry(pat, sub):
-        def per_entry(e):
-            child = compile_variant(
-                sub,
-                e["value"],
-                replace(ctx, schema_path=ctx.schema_path + (pat,),
-                        instance_path=ctx.instance_path + (e["key"],)),
-            )
-            hit = e["key"].rlike(pat)
-            return F.struct(
-                F.when(hit, child.ok).otherwise(F.lit(True)).alias("ok"),
-                F.when(hit, child.violations).otherwise(_empty()).alias("v"),
-            )
-
-        return per_entry
-
-    for pat, sub in value.items():
-        checked = F.transform(F.map_entries(as_map(v)), make_entry(pat, sub))
-        comps.append(
-            Compiled(
-                ok=F.forall(checked, lambda s: s["ok"]),
-                violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-            )
-        )
-    return _object_guard(v, merge(comps))
-
-
-@register("patternGroups")
-def _v_pattern_groups(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    comps = []
-
-    def make_entry(pat, sub):
-        def per_entry(e):
-            child = compile_variant(
-                sub, e["value"],
-                replace(ctx, schema_path=ctx.schema_path + (pat,),
-                        instance_path=ctx.instance_path + (e["key"],)),
-            )
-            hit = e["key"].rlike(pat)
-            return F.struct(
-                F.when(hit, child.ok).otherwise(F.lit(True)).alias("ok"),
-                F.when(hit, child.violations).otherwise(_empty()).alias("v"),
-            )
-
-        return per_entry
-
-    for pat, group in value.items():
-        sub = group.get("schema", True)
-        checked = F.transform(F.map_entries(as_map(v)), make_entry(pat, sub))
-        comps.append(
-            Compiled(
-                ok=F.forall(checked, lambda s: s["ok"]),
-                violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-            )
-        )
-
-        def count_matches(_pat=pat):
-            return F.size(F.filter(F.map_keys(as_map(v)), lambda k: k.rlike(_pat)))
-
-        cnt = count_matches()
-        mn, mx = group.get("minimum"), group.get("maximum")
-        if mn is not None:
-            comps.append(
-                simple_check(
-                    cnt >= F.lit(mn), ctx.schema_path, ctx.instance_path, "patternGroups",
-                    F.concat(F.lit("patternGroup expects number of matched props "),
-                             cnt.cast("string"), F.lit(f" > {mn}")),
-                    ctx.severity("patternGroups"),
-                )
-            )
-        if mx is not None:
-            comps.append(
-                simple_check(
-                    cnt <= F.lit(mx), ctx.schema_path, ctx.instance_path, "patternGroups",
-                    F.concat(F.lit("patternGroup expects number of matched props "),
-                             cnt.cast("string"), F.lit(f" < {mx}")),
-                    ctx.severity("patternGroups"),
-                )
-            )
-    return _object_guard(v, merge(comps))
-
-
-@register("additionalProperties")
-def _v_additional_properties(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-    props = list((schema.get("properties") or {}).keys())
-    pats = list(schema.get("patternProperties") or {}) + list(schema.get("patternGroups") or {})
-    sev = ctx.severity("additionalProperties")
-
-    def is_extra(k):
-        cond = F.lit(True)
-        for p in props:
-            cond = cond & (k != F.lit(p))
-        for p in pats:
-            cond = cond & ~k.rlike(p)
-        return cond
-
-    if value is False:
-        extras = F.filter(F.map_keys(as_map(v)), is_extra)
-
-        def viol_for(k):
-            return F.struct(
-                F.array(*[F.lit(s) for s in ctx.schema_path]).alias("keyword_path"),
-                F.array(*([F.lit(str(s)) if not isinstance(s, Column) else s.cast("string")
-                           for s in ctx.instance_path] + [k])).alias("instance_path"),
-                F.lit("additionalProperties").alias("keyword"),
-                F.lit("extra property").alias("message"),
-                F.lit(sev).alias("severity"),
-            )
-
-        return _object_guard(
-            v, Compiled(ok=F.size(extras) == 0, violations=F.transform(extras, viol_for))
-        )
-    if isinstance(value, dict) or value is True:
-        sub = value if isinstance(value, dict) else True
-
-        def per_entry(e):
-            child = compile_variant(
-                sub, e["value"],
-                replace(ctx, instance_path=ctx.instance_path + (e["key"],)),
-            )
-            hit = is_extra(e["key"])
-            return F.struct(
-                F.when(hit, child.ok).otherwise(F.lit(True)).alias("ok"),
-                F.when(hit, child.violations).otherwise(_empty()).alias("v"),
-            )
-
-        checked = F.transform(F.map_entries(as_map(v)), per_entry)
-        return _object_guard(
-            v,
-            Compiled(
-                ok=F.forall(checked, lambda s: s["ok"]),
-                violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-            ),
-        )
-    return None
-
-
-@register("propertyNames")
-def _v_property_names(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    def name_ok(k):
-        # property names validate as plain strings: wrap in a variant via
-        # parse_json of the quoted name? cheaper: compile against a string
-        # Column using the STRUCT backend with StringType dtype
-        from . import compiler as C
-
-        return C.compile_schema(value, k, replace(ctx, dtype=T.StringType())).ok
-
-    bad = F.filter(F.map_keys(as_map(v)), lambda k: ~name_ok(k))
-    ok = F.size(bad) == 0
-    msg = F.concat(F.lit("Invalid property name - "), F.array_join(bad, ", "))
-    c = simple_check(ok, ctx.schema_path, ctx.instance_path, "propertyNames", msg,
-                     ctx.severity("propertyNames"))
-    return _object_guard(v, c)
-
-
-@register("patternRequired")
-def _v_pattern_required(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    comps = []
-
-    def matcher(p):
-        return lambda k: k.rlike(p)
-
-    for pat in value:
-        ok = F.exists(F.map_keys(as_map(v)), matcher(pat))
-        comps.append(
-            simple_check(
-                ok, ctx.schema_path, ctx.instance_path, "patternRequired",
-                f"no properites, which matches {pat}", ctx.severity("patternRequired"),
-            )
-        )
-    return _object_guard(v, merge(comps))
-
-
-@register("exclusiveProperties")
-def _v_exclusive_properties(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    sev = ctx.severity("exclusiveProperties")
-    comps = []
-    for group in value:
-        props = group.get("properties", [])
-        required = group.get("required", False)
-        cnt = F.lit(0)
-        for p in props:
-            cnt = cnt + get_field(v, p).isNotNull().cast("int")
-        names = ", ".join(props)
-        if required:
-            comps.append(
-                simple_check(cnt >= 1, ctx.schema_path, ctx.instance_path,
-                             "exclusiveProperties", f"One of properties {names} is required", sev)
-            )
-        comps.append(
-            simple_check(cnt <= 1, ctx.schema_path, ctx.instance_path,
-                         "exclusiveProperties", f"Properties {names} are mutually exclusive", sev)
-        )
-    return _object_guard(v, merge(comps))
-
-
-@register("discriminator")
-def _v_discriminator(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    sev = ctx.severity("discriminator")
-    defs = (ctx.root_schema or schema).get("definitions", {})
-    tag = as_string(get_field(v, value))
-    ok_expr = F.lit(False)
-    viol_expr = violation(
-        ctx.schema_path, ctx.instance_path, "discriminator",
-        F.concat(F.lit("Could not resolve #/definitions/"), F.coalesce(tag, F.lit("null"))), sev,
-    )
-    for name in reversed(list(defs.keys())):
-        child = compile_variant(
-            defs[name], v, replace(ctx, schema_path=ctx.schema_path + ("definitions", name))
-        )
-        ok_expr = F.when(tag == F.lit(name), child.ok).otherwise(ok_expr)
-        viol_expr = F.when(tag == F.lit(name), child.violations).otherwise(viol_expr)
-    ok = F.when(tag.isNull(), F.lit(True)).otherwise(ok_expr)
-    viols = F.when(tag.isNull(), _empty()).otherwise(viol_expr)
-    return _object_guard(v, Compiled(ok=ok, violations=viols))
-
-
-# --- array keywords ----------------------------------------------------------
-
-
-def _array_guard(v: Column, inner: Compiled) -> Compiled:
-    return Compiled(
-        ok=F.when(~is_array(v) | v.isNull(), F.lit(True)).otherwise(inner.ok),
-        violations=F.when(~is_array(v) | v.isNull(), _empty()).otherwise(inner.violations),
-    )
-
-
-@register("items")
-def _v_items(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-    arr = as_array(v)
-    if isinstance(value, (dict, bool)):
-        def per_elem(x, i):
-            c = compile_variant(value, x, replace(ctx, instance_path=ctx.instance_path + (i,)))
-            return F.struct(c.ok.alias("ok"), c.violations.alias("v"))
-
-        checked = F.transform(arr, per_elem)
-        return _array_guard(
-            v,
-            Compiled(
-                ok=F.forall(checked, lambda s: s["ok"]),
-                violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-            ),
-        )
-    if isinstance(value, list):
-        if schema.get("additionalItems") is True:
-            # core.clj:1462 quirk: `(= true ai)` returns ctx before any
-            # positional validator runs — tuple validation is disabled,
-            # only the expected-array type error remains
-            return Compiled(
-                ok=F.when(v.isNull() | is_array(v), F.lit(True)).otherwise(F.lit(False)),
-                violations=F.when(v.isNull() | is_array(v), _empty()).otherwise(
-                    violation(ctx.schema_path, ctx.instance_path, "items",
-                              "expected array", ctx.severity("items"))
-                ),
-            )
-        comps = []
-        for i, sub in enumerate(value):
-            elem = F.element_at(arr, i + 1)
-            child = compile_variant(
-                sub, elem,
-                replace(ctx, schema_path=ctx.schema_path + (str(i),),
-                        instance_path=ctx.instance_path + (i,)),
-            )
-            comps.append(
-                Compiled(
-                    ok=F.when(F.size(arr) <= F.lit(i), F.lit(True)).otherwise(child.ok),
-                    violations=F.when(F.size(arr) <= F.lit(i), _empty()).otherwise(child.violations),
-                )
-            )
-        ai = schema.get("additionalItems")
-        n = len(value)
-        if ai is False:
-            comps.append(
-                simple_check(
-                    F.size(arr) <= F.lit(n),
-                    ctx.schema_path[:-1] + ("items",), ctx.instance_path, "items",
-                    "additional items not allowed", ctx.severity("items"),
-                )
-            )
-        elif isinstance(ai, dict):
-            def per_extra(x, i):
-                c = compile_variant(
-                    ai, x,
-                    replace(ctx, schema_path=ctx.schema_path[:-1] + ("additionalItems",),
-                            instance_path=ctx.instance_path + (i + F.lit(n),)),
-                )
-                return F.struct(c.ok.alias("ok"), c.violations.alias("v"))
-
-            extras = F.slice(arr, n + 1, F.greatest(F.size(arr) - F.lit(n), F.lit(0)))
-            checked = F.transform(extras, per_extra)
-            comps.append(
-                Compiled(
-                    ok=F.forall(checked, lambda s: s["ok"]),
-                    violations=F.flatten(F.transform(checked, lambda s: s["v"])),
-                )
-            )
-        # tuple form errors on non-arrays ("expected array", core.clj:1448)
-        inner = merge(comps)
+        return self._once(("is", jtype), build)
+
+    def inapplicable(self, jtype: str) -> Column:
+        return self._once(("skip", jtype), lambda: ~self.is_type(jtype) | self.col.isNull())
+
+    def guard(self, jtype: str, c: Optional[Compiled], mismatch=None) -> Compiled:
+        """`c` for present `jtype` values, a pass for absent ones; values
+        of another JSON type pass, or fail with the ``mismatch()``
+        violation."""
+        if mismatch is None:
+            return _unless(self.inapplicable(jtype), c)
+        c = c or Compiled.passed()
+        other = ~self.is_type(jtype)
         return Compiled(
-            ok=F.when(v.isNull(), F.lit(True)).when(~is_array(v), F.lit(False)).otherwise(inner.ok),
-            violations=F.when(v.isNull(), _empty())
-            .when(~is_array(v), violation(ctx.schema_path, ctx.instance_path, "items",
-                                          "expected array", ctx.severity("items")))
-            .otherwise(inner.violations),
+            ok=F.when(self.col.isNull(), F.lit(True)).when(other, F.lit(False)).otherwise(c.ok),
+            violations=F.when(self.col.isNull(), _typed_empty_array())
+            .when(other, mismatch())
+            .otherwise(c.violations),
         )
-    return None
 
+    # -- typed reads --------------------------------------------------------
 
-@register("uniqueItems")
-def _v_unique_items(value, schema, v: Column, ctx: Ctx) -> Optional[Compiled]:
-    if isinstance(value, dict):
-        raise ColumnBackendUnsupported("$data uniqueItems on the variant backend")
-    if value is not True:
+    def as_string(self) -> Column:
+        return self._get("string")
+
+    def as_number(self) -> Column:
+        return self._get("double")
+
+    def as_decimal(self) -> Column:
+        return self._get("decimal(38,10)")
+
+    def as_long(self) -> Column:
+        return self._get("bigint")
+
+    def as_bool(self) -> Column:
+        return self._get("boolean")
+
+    def as_map(self) -> Column:
+        return self._get("map<string,variant>")
+
+    def as_array(self) -> Column:
+        return self._get("array<variant>")
+
+    def as_text(self) -> Column:
+        """The value as the struct view prints it: strings unquoted,
+        objects and arrays as JSON, and fractional numbers through double
+        — JSON ``0.0`` is a DECIMAL(1,0) variant, whose own text is
+        ``0``."""
+        fractional = self.is_type("number") & ~self.is_type("integer")
+        return F.when(fractional, self.as_number().cast("string")).otherwise(self.col.cast("string"))
+
+    # -- presence ---------------------------------------------------------
+
+    def present(self) -> Column:
+        """Present AND not JSON null — has-property? semantics
+        (core.clj:852-854: nil counts as missing)."""
+        return self._once("present", lambda: self.col.isNotNull() & ~self._json_null())
+
+    def exists(self) -> Column:
+        """The key exists, even with a JSON null value (`contains?`)."""
+        return self.col.isNotNull()
+
+    def absent(self) -> Column:
+        return ~self.present()
+
+    # -- object and array access -------------------------------------------
+
+    def field_names(self) -> None:
+        return None  # keys are only known per row: see as_map
+
+    def field(self, key: str) -> "VariantView":
+        return self._once(("field", key), lambda: VariantView(F.element_at(self.as_map(), F.lit(key))))
+
+    def entry(self, value: Column) -> "VariantView":
+        return VariantView(value)
+
+    def property_count(self) -> Column:
+        return F.size(self.as_map())
+
+    def element(self, x: Column) -> "VariantView":
+        return VariantView(x)
+
+    # -- typed equality (json-compare, core.clj:472-478: strict numeric
+    # identity) -----------------------------------------------------------
+
+    def equals(self, member) -> Column:
+        if member is None:
+            return self._json_null()
+        if isinstance(member, bool):
+            return self.is_type("boolean") & (self.as_bool() == F.lit(member))
+        if isinstance(member, int):
+            return self.is_type("integer") & (self.as_long() == F.lit(_i64_guard(member)))
+        if isinstance(member, float):
+            return (self.is_type("number") & ~self.is_type("integer")) & (self.as_number() == F.lit(member))
+        if isinstance(member, str):
+            return self.is_type("string") & (self.as_string() == F.lit(member))
+        raise ColumnBackendUnsupported(f"non-scalar literal {member!r} on the variant backend")
+
+    def one_of(self, values: list) -> Column:
+        ok = F.lit(False)
+        for m in values:
+            ok = ok | self.equals(m)
+        return ok
+
+    def unique_form(self) -> Column:
+        # canonical form = type tag + json: keeps 1 ≠ 1.0 (to_json alone
+        # prints both as "1")
+        return F.transform(self.as_array(), lambda x: F.concat_ws(":", F.schema_of_variant(x), F.to_json(x)))
+
+    def member_forms(self, values: list) -> tuple:
+        return (
+            F.transform(self.as_array(), lambda x: F.to_json(x)),
+            F.array(*[F.lit(json.dumps(m)) for m in values]),
+        )
+
+    # -- compile-time hooks -------------------------------------------------
+
+    def data(self, value, ctx: Ctx):
+        if _is_data(value):
+            raise ColumnBackendUnsupported("$data on the variant backend")
         return None
-    # canonical form = type tag + json: keeps 1 ≠ 1.0 (to_json alone prints
-    # both as "1")
-    arr = F.transform(
-        as_array(v), lambda x: F.concat_ws(":", vtype(x), F.to_json(x))
-    )
-    ok = F.size(F.array_distinct(arr)) == F.size(arr)
-    c = simple_check(ok, ctx.schema_path, ctx.instance_path, "uniqueItems",
-                     "expected unique items", ctx.severity("uniqueItems"))
-    return _array_guard(v, c)
 
+    def admit(self, schema: dict) -> None:
+        """Reject a subschema holding a `$data` value before any of its
+        Columns is built."""
+        if any(_is_data(v) for v in schema.values()):
+            raise ColumnBackendUnsupported("$data on the variant backend")
 
-@register("contains")
-def _v_contains(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    def pred(x):
-        return compile_variant(value, x, ctx).ok
-
-    ok = F.exists(as_array(v), pred)
-    c = simple_check(ok, ctx.schema_path, ctx.instance_path, "contains",
-                     f"expected contains {json.dumps(value)}", ctx.severity("contains"))
-    return _array_guard(v, c)
-
-
-@register("subset")
-def _v_subset(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    if isinstance(value, dict):
-        raise ColumnBackendUnsupported("$data subset on the variant backend")
-    ref = F.array(*[F.lit(json.dumps(m)) for m in value])
-    arr = F.transform(as_array(v), lambda x: F.to_json(x))
-    ok = F.size(F.array_except(arr, ref)) == F.lit(0)
-    c = simple_check(ok, ctx.schema_path, ctx.instance_path, "subset",
-                     "expected a subset of the reference array", ctx.severity("subset"))
-    return _array_guard(v, c)
-
-
-# --- combinators --------------------------------------------------------------
-
-
-@register("allOf")
-def _v_all_of(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    return merge([
-        compile_variant(o, v, replace(ctx, schema_path=ctx.schema_path + (str(i),)))
-        for i, o in enumerate(value)
-    ])
-
-
-@register("extends")
-def _v_extends(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    opts = value if isinstance(value, list) else [value]
-    return merge([
-        compile_variant(o, v, replace(ctx, schema_path=ctx.schema_path + (str(i),)))
-        for i, o in enumerate(opts)
-    ])
-
-
-@register("anyOf")
-def _v_any_of(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    oks = [compile_variant(o, v, ctx).ok for o in value]
-    ok = oks[0]
-    for o in oks[1:]:
-        ok = ok | o
-    return simple_check(ok, ctx.schema_path, ctx.instance_path, "anyOf",
-                        "Non alternatives are valid", ctx.severity("anyOf"))
-
-
-@register("oneOf")
-def _v_one_of(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    cnt = None
-    for o in value:
-        term = compile_variant(o, v, ctx).ok.cast("int")
-        cnt = term if cnt is None else cnt + term
-    ok = cnt == F.lit(1)
-    msg = F.when(cnt > 1, F.lit("expected one of, but more then one are valid")).otherwise(
-        F.lit("expected one of, but no one is valid")
-    )
-    return simple_check(ok, ctx.schema_path, ctx.instance_path, "oneOf", msg, ctx.severity("oneOf"))
-
-
-@register("not")
-def _v_not(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    ok = ~compile_variant(value, v, ctx).ok
-    return simple_check(ok, ctx.schema_path, ctx.instance_path, "not",
-                        f"Expected not {json.dumps(value)}", ctx.severity("not"))
-
-
-@register("disallow")
-def _v_disallow(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    opts = value if isinstance(value, list) else [value]
-    any_ok = F.lit(False)
-    for o in opts:
-        o = {"type": o} if isinstance(o, str) else o
-        any_ok = any_ok | compile_variant(o, v, ctx).ok
-    return simple_check(~any_ok, ctx.schema_path, ctx.instance_path, "disallow",
-                        f"Disallowed by {json.dumps(value)}", ctx.severity("disallow"))
-
-
-@register("if")
-def _v_if(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    # (or th true) quirk, core.clj:735-736: then/else of FALSE coerces
-    # to true (Clojure `or` skips falsy), never an always-fail schema
-    th_s, el_s = schema.get("then"), schema.get("else")
-    th_s = True if th_s is None or th_s is False else th_s
-    el_s = True if el_s is None or el_s is False else el_s
-    cond = compile_variant(value, v, ctx).ok
-    th = compile_variant(th_s, v,
-                         replace(ctx, schema_path=ctx.schema_path[:-1] + ("then",)))
-    el = compile_variant(el_s, v,
-                         replace(ctx, schema_path=ctx.schema_path[:-1] + ("else",)))
-    return Compiled(
-        ok=F.when(cond, th.ok).otherwise(el.ok),
-        violations=F.when(cond, th.violations).otherwise(el.violations),
-    )
-
-
-@register("switch")
-def _v_switch(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    comps: list[Compiled] = []
-
-    def clause_then(cl, kw_path) -> Compiled:
-        th = cl.get("then")
-        if th is False:
-            msg = (f"expected not matches {json.dumps(cl.get('if'))}" if "if" in cl
-                   else "switch failed - nothing matched")
-            return simple_check(F.lit(False), kw_path, ctx.instance_path, "switch", msg,
-                                ctx.severity("switch"))
-        if th is True or th is None:
-            return Compiled.passed()
-        return compile_variant(th, v, replace(ctx, schema_path=kw_path))
-
-    rest = list(value)
-    idx = 0
-    while rest and rest[0].get("continue") and "if" in rest[0]:
-        cl = rest.pop(0)
-        cond = compile_variant(cl["if"], v, ctx).ok
-        th = clause_then(cl, ctx.schema_path + (str(idx),))
-        comps.append(
-            Compiled(
-                ok=F.when(cond, th.ok).otherwise(F.lit(True)),
-                violations=F.when(cond, th.violations).otherwise(_empty()),
-            )
+    def column(self, keyword: str) -> Column:
+        raise ColumnBackendUnsupported(
+            f"keyword {keyword!r} is registered for typed Column targets; a Variant value needs the Python backend"
         )
-        idx += 1
-    ok_expr = F.lit(True)
-    viol_expr = _empty()
-    for j, cl in reversed(list(enumerate(rest))):
-        kw_path = ctx.schema_path + (str(idx + j),)
-        th = clause_then(cl, kw_path)
-        if "if" in cl:
-            cond = compile_variant(cl["if"], v, ctx).ok
-            ok_expr = F.when(cond, th.ok).otherwise(ok_expr)
-            viol_expr = F.when(cond, th.violations).otherwise(viol_expr)
-        else:
-            ok_expr, viol_expr = th.ok, th.violations
-    comps.append(Compiled(ok=ok_expr, violations=viol_expr))
-    return merge(comps)
-
-
-@register("$ref")
-def _v_ref(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    sub = _resolve_schema_pointer(value, ctx.root_schema or {})
-    if sub is None:
-        return simple_check(F.lit(False), ctx.schema_path, ctx.instance_path, "$ref",
-                            f"Could not resolve $ref = {value}", ctx.severity("$ref"))
-    if ctx.depth <= 0:
-        raise ColumnBackendUnsupported(f"$ref {value!r} exceeds variant unroll depth")
-    return compile_variant(sub, v, replace(ctx, depth=ctx.depth - 1))
-
-
-@register("deferred")
-def _v_deferred(value, schema, v: Column, ctx: Ctx) -> Compiled:
-    return Compiled(
-        ok=F.lit(True),
-        violations=violation(ctx.schema_path, ctx.instance_path, "deferred",
-                             F.lit(json.dumps(value)), "deferred"),
-    )
 
 
 # --- entry points --------------------------------------------------------------
 
 
 def compile_variant(schema, v: Column, ctx: Ctx) -> Compiled:
-    if schema is True or schema == {}:
-        return Compiled.passed()
-    if schema is False:
-        return simple_check(
-            F.lit(False), ctx.schema_path, ctx.instance_path, "schema",
-            "schema is 'false', which means it's always fails", ctx.severity("schema"),
-        )
-    if not isinstance(schema, dict):
-        return simple_check(
-            F.lit(False), ctx.schema_path, ctx.instance_path, "schema",
-            f"Invalid schema {schema}", ctx.severity("schema"),
-        )
-    if any(isinstance(val, dict) and "$data" in val for val in schema.values()):
-        raise ColumnBackendUnsupported("$data on the variant backend")
-    comps = []
-    for k, val in schema.items():
-        if k in NOOPS:
-            continue
-        fn = VARIANT_COMPILERS.get(k)
-        if fn is None:
-            continue
-        c = fn(val, schema, v, ctx.at_keyword(k))
-        if c is not None:
-            comps.append(c)
-    return merge(comps)
+    """Compile a (sub)schema against a VariantType Column."""
+    return _compile(schema, VariantView(v), ctx)
 
 
 def compile_for_json(

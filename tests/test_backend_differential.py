@@ -250,7 +250,8 @@ def test_differential_variant_backend(spark):
     n_covered = 0
     for si in range(n_schemas):
         schema = rand_schema(rng)
-        docs = [row_to_doc(rand_row(rng)) for _ in range(n_rows)]
+        rows = [rand_row(rng) for _ in range(n_rows)]
+        docs = [row_to_doc(r) for r in rows]
         v = engine.compile(schema)
         py_valid = [not v(d)["errors"] for d in docs]
         jdf = spark.createDataFrame([(json.dumps(d),) for d in docs], "data_json string")
@@ -266,7 +267,25 @@ def test_differential_variant_backend(spark):
                 f"schema={json.dumps(schema)}\ndoc={json.dumps(docs[i])}\n"
                 f"errors={v(docs[i])['errors']}"
             )
+        # one message per violation: the struct view over the typed rows and
+        # the Variant view over the same docs emit the same violation rows
+        col_out = engine.with_validation(spark.createDataFrame(rows, TABLE_SCHEMA), schema)
+        for i, (a, b) in enumerate(zip(_violation_rows(col_out), _violation_rows(out))):
+            assert a == b, (
+                f"schema#{si} row#{i} violations differ:\nstruct={a}\nvariant={b}\n"
+                f"schema={json.dumps(schema)}\ndoc={json.dumps(docs[i])}"
+            )
     assert n_covered >= n_schemas // 2, n_covered  # variant path genuinely exercised
+
+
+def _violation_rows(df):
+    return [
+        sorted(
+            (tuple(v["keyword_path"]), tuple(v["instance_path"]), v["keyword"], v["message"], v["severity"])
+            for v in r["violations"]
+        )
+        for r in df.collect()
+    ]
 
 
 def test_differential_map_object_keywords(spark):

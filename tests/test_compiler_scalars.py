@@ -451,3 +451,32 @@ def test_enum_data_nil_ref_passes_before_broken_enum(spark):
         schema,
     )
     assert vm == {"a": True, "b": False}
+
+
+def test_enum_data_empty_array_member_across_element_types(spark):
+    """$data enum whose members are arrays of another element type than
+    the target array: [] = [] under Clojure `=` whatever the element
+    types, so an empty target is a member of an enum holding an empty
+    array — the same escape the const branch has."""
+    from json_schema_clj_spark import engine
+
+    schema = {"properties": {"a": {"enum": {"$data": "1/b"}}}}
+    rows = [("e", [], [[]]), ("n", [1], [[]])]
+    vm = _valid_map(spark, rows, "k string, a array<long>, b array<array<string>>", schema)
+    py = {k: not engine.validate(schema, {"a": a, "b": b})["errors"] for k, a, b in rows}
+    assert vm == py == {"e": True, "n": False}
+
+
+def test_const_data_map_key_type_mismatch_is_invalid_row(spark):
+    """$data const between maps whose KEY types differ: never equal, so
+    the row is invalid — the comparison must not reach Spark, where
+    map<int,string> <=> map<string,string> aborts the whole job with
+    DATATYPE_MISMATCH."""
+    schema = {"properties": {"a": {"const": {"$data": "1/b"}}}}
+    vm = _valid_map(
+        spark,
+        [("x", {1: "v"}, {"1": "v"}), ("y", None, None)],
+        "k string, a map<int,string>, b map<string,string>",
+        schema,
+    )
+    assert vm == {"x": False, "y": True}

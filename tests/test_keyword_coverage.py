@@ -55,7 +55,7 @@ def test_column_backend_coverage():
     assert set(NOOPS) <= (NOOP_KEYWORDS | set(KEYWORD_COMPILERS))
 
 
-def test_extension_surface():
+def test_extension_surface(spark):
     # register a custom keyword on both backends (multimethod analog)
     from json_schema_clj_spark import engine
     from json_schema_clj_spark.plans.ir import simple_check
@@ -81,6 +81,12 @@ def test_extension_surface():
     try:
         assert engine.validate({"even": True}, 3)["errors"]
         assert not engine.validate({"even": True}, 4)["errors"]
+        # auto JSON dispatch: the Variant view has no typed Column to give
+        # a Column-target keyword, so the schema falls back to the Python
+        # backend instead of silently dropping the keyword
+        jdf = spark.createDataFrame([('{"n": 3}',), ('{"n": 4}',)], "data_json string")
+        out = engine.validate_json_column(jdf, {"properties": {"n": {"even": True}}})
+        assert [r["valid"] for r in out.collect()] == [False, True]
     finally:
         KEYWORDS.pop("even", None)
         KEYWORD_COMPILERS.pop("even", None)

@@ -25,29 +25,35 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REF = "/root/reference"
 
 
-def _all_cases():
+def _draft_paths():
     paths = []
     for d in ("draft3", "draft4", "draft6", "draft7"):
         # bignum.json: the variant binary encoding renders BOTH a
         # beyond-int64 integer and a fractionless float as DECIMAL(p,0)
         # (probe: parse_json('1.0') -> DECIMAL(1,0)), so the type dispatch
         # cannot hold 1 ≠ 1.0 and bignum-is-integer simultaneously —
-        # documented limitation (variant_compiler.py:16-17); bound/member
-        # bignum literals fall back cleanly via _i64_guard, and the
-        # Python + Arrow paths validate the file exactly
+        # documented limitation (variant_compiler.py parity notes);
+        # bound/member bignum literals fall back cleanly via _i64_guard,
+        # and the Python + Arrow paths validate the file exactly
         paths += [
             p
             for p in sorted(glob.glob(f"{HERE}/fixtures/{d}/*.json"))
             if not p.endswith("/bignum.json")
         ]
-    cases = load_cases(paths)
+    return paths
+
+
+def _all_cases():
+    cases = load_cases(_draft_paths())
     cases += load_cases(sorted(glob.glob(f"{REF}/test/v5/*.json")))
     cases += load_cases([f"{REF}/test/custom-scenarios/nested_ref.json"])
     return cases
 
 
-def test_variant_backend_conformance(spark):
-    cases = _all_cases()
+def _fold_conformance(spark, cases):
+    """Run every variant-compilable schema of `cases` in ONE Spark job and
+    assert no wrong verdict; declined schemas count as clean fallbacks,
+    which must stay at most a quarter of the schemas."""
     by_schema: dict[str, list] = {}
     for c in cases:
         by_schema.setdefault(c["schema_json"], []).append(c)
@@ -83,6 +89,18 @@ def test_variant_backend_conformance(spark):
     assert not bad, f"{len(bad)}/{total} variant verdicts wrong ({fallbacks} schemas fell back):\n{msg}"
     # coverage floor: the variant backend should handle the large majority
     assert fallbacks <= len(by_schema) * 0.25, (fallbacks, len(by_schema))
+
+
+def test_variant_backend_conformance(spark):
+    _fold_conformance(spark, _all_cases())
+
+
+def test_variant_backend_conformance_in_repo(spark):
+    """The same fold over the in-repo authored corpus only (draft3-7
+    without bignum.json, plus the v5 fixtures): the fixture-level gate on
+    the Variant view that needs no reference checkout."""
+    v5 = sorted(glob.glob(f"{HERE}/fixtures/v5/*.json"))
+    _fold_conformance(spark, load_cases(_draft_paths() + v5))
 
 
 def test_variant_violation_paths(spark):
