@@ -25,7 +25,6 @@ the distributed surface:
 
 from __future__ import annotations
 
-import json
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
@@ -35,7 +34,7 @@ from pyspark.sql import types as T
 from .operators.validate import validate as validate_table  # noqa: F401
 from .operators.validate import with_validation
 from .plans import compiler as _col_compiler
-from .plans.compiler import ColumnBackendUnsupported
+from .plans.compiler import ColumnBackendUnsupported, CompileMemo, compile_key
 from .pyvalidator import validator as _py_validator
 from .pyvalidator.udf import validate_json_df
 from .pyvalidator.validator import compile_schema as compile  # noqa: A001
@@ -77,7 +76,7 @@ def spark_schema_for(schema: dict) -> Optional[T.DataType]:
     return None
 
 
-_JSON_COMPILE_CACHE: dict = {}
+_JSON_COMPILE_CACHE = CompileMemo()
 
 
 def validate_json_column(
@@ -107,7 +106,6 @@ def validate_json_column(
     reference fails.  `force_backend="variant"|"python"` pin a backend.
     """
     if force_backend in (None, "variant"):
-        from .plans.compiler import KEYWORD_COMPILERS, _registry_fingerprint
         from .plans.variant_compiler import compile_for_json
 
         try:
@@ -115,26 +113,18 @@ def validate_json_column(
             # an attribute reference inside the check tree instead of being
             # inlined (and re-parsed) at every keyword — ~5× at 20 checks
             tmp = f"__parsed_{json_col}"
-            # memoize the compiled tree (Column construction is ~3 ms of
+            # memoize the compile result (Column construction is ~3 ms of
             # Py4J per op — seconds per compile; the tree only depends on
             # schema/colname/config, so compile once per process like the
-            # reference's compile / validate split, core.clj:1484-1492)
-            try:
-                key = (
-                    json.dumps(schema, sort_keys=True),
-                    json_col,
-                    json.dumps(config, sort_keys=True) if config else "",
-                    _registry_fingerprint(KEYWORD_COMPILERS),
-                )
-            except TypeError:
-                key = None
-            compiled = _JSON_COMPILE_CACHE.get(key) if key is not None else None
-            if compiled is None:
-                compiled = compile_for_json(
+            # reference's compile / validate split, core.clj:1484-1492).  A
+            # rejection is memoized too: a schema the Variant view cannot
+            # compile goes straight to Python on every later call.
+            compiled = _JSON_COMPILE_CACHE.compile(
+                compile_key(schema, json_col, config or None),
+                lambda: compile_for_json(
                     schema, F.col(json_col), config=config, parsed_col=F.col(tmp)
-                )
-                if key is not None:
-                    _JSON_COMPILE_CACHE[key] = compiled
+                ),
+            )
             out = df.withColumn(tmp, F.try_parse_json(F.col(json_col))).withColumn(
                 "violations", compiled.violations
             )

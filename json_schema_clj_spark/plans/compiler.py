@@ -52,6 +52,8 @@ from __future__ import annotations
 
 import json
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import replace
 from decimal import Decimal
 from typing import Any, Callable, Optional
@@ -1833,12 +1835,58 @@ def compile_schema(schema, target: Column, ctx: Ctx) -> Compiled:
     return _compile(schema, StructView(target, ctx.dtype), ctx)
 
 
-_TABLE_COMPILE_CACHE: dict = {}
+# Entries per compile memo.  A Compiled tree holds a few thousand JVM
+# objects, so a long-lived multi-schema process must not keep every one.
+COMPILE_MEMO_SIZE = 64
 
 
-def _registry_fingerprint(reg: dict) -> tuple:
-    """Cache-key component that changes when keywords are (re)registered."""
-    return tuple((k, id(v)) for k, v in sorted(reg.items()))
+def compile_key(*parts) -> Optional[tuple]:
+    """Memo key for one compile: every JSON-able input that shapes the tree,
+    plus the keyword registry, so a (re)registered keyword misses.  None
+    when a part is not JSON-serialisable (such a compile is not memoised)."""
+    try:
+        dumped = tuple(json.dumps(p, sort_keys=True) for p in parts)
+    except TypeError:
+        return None
+    return dumped + (tuple((k, id(v)) for k, v in sorted(KEYWORD_COMPILERS.items())),)
+
+
+class CompileMemo:
+    """Bounded LRU of compile results: a :class:`Compiled` tree, or the
+    reason a compile raised :class:`ColumnBackendUnsupported`.  A rejection
+    is a compile result too; a hit on one raises a fresh exception, because
+    re-raising a stored instance grows its ``__traceback__`` every time."""
+
+    def __init__(self):
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def compile(self, key: Optional[tuple], build: Callable[[], Compiled]) -> Compiled:
+        if key is None:
+            return build()
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is not None:
+                self._entries.move_to_end(key)
+        if hit is None:
+            try:
+                hit = build()
+            except ColumnBackendUnsupported as e:
+                hit = str(e)
+            with self._lock:
+                self._entries[key] = hit
+                self._entries.move_to_end(key)
+                if len(self._entries) > COMPILE_MEMO_SIZE:
+                    self._entries.popitem(last=False)
+        if isinstance(hit, str):
+            raise ColumnBackendUnsupported(hit)
+        return hit
+
+
+_TABLE_COMPILE_CACHE = CompileMemo()
 
 
 def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional[dict] = None,
@@ -1849,7 +1897,8 @@ def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional
     a :class:`Compiled` whose expressions reference the table's columns
     directly — Catalyst prunes unused ones.
 
-    Results are memoized per (schema, table schema, config, registry):
+    Results are memoized per (schema, table schema, config, registry) in
+    a bounded :class:`CompileMemo`:
     building a check tree costs one Py4J round trip (~3 ms) per Column op,
     so a mid-sized schema spends seconds of driver time per compile — paid
     once per process this way, like the reference's compile-once /
@@ -1857,29 +1906,18 @@ def compile_for_table(schema: dict, table_schema: T.StructType, config: Optional
     unresolved expression trees, reusable across DataFrames and sessions
     within one JVM gateway.
     """
-    try:
-        key = (
-            json.dumps(schema, sort_keys=True),
-            json.dumps(extra_root, sort_keys=True) if extra_root is not None else None,
-            json.dumps(config, sort_keys=True) if config else "",
-            table_schema.json(),
-            _registry_fingerprint(KEYWORD_COMPILERS),
+    def build() -> Compiled:
+        row = F.struct(*[F.col(f.name).alias(f.name) for f in table_schema.fields])
+        ctx = Ctx(
+            schema_path=(),
+            instance_path=(),
+            config=config or {},
+            root_schema=extra_root or schema,
+            dtype=table_schema,
+            root_col=row,
+            root_dtype=table_schema,
         )
-    except TypeError:
-        key = None
-    if key is not None and key in _TABLE_COMPILE_CACHE:
-        return _TABLE_COMPILE_CACHE[key]
-    row = F.struct(*[F.col(f.name).alias(f.name) for f in table_schema.fields])
-    ctx = Ctx(
-        schema_path=(),
-        instance_path=(),
-        config=config or {},
-        root_schema=extra_root or schema,
-        dtype=table_schema,
-        root_col=row,
-        root_dtype=table_schema,
-    )
-    out = compile_schema(schema, row, ctx)
-    if key is not None:
-        _TABLE_COMPILE_CACHE[key] = out
-    return out
+        return compile_schema(schema, row, ctx)
+
+    key = compile_key(schema, extra_root, config or None, table_schema.jsonValue())
+    return _TABLE_COMPILE_CACHE.compile(key, build)

@@ -9,7 +9,7 @@ exclusiveProperties, subset, deferred).
 
 This backend exists for what Catalyst Columns cannot express: arbitrary
 schemaless JSON documents, unbounded `$ref` recursion, and dynamic object
-shapes.  On Spark it runs inside Arrow-batched pandas UDFs
+shapes.  On Spark it runs inside an Arrow UDF
 (:mod:`.udf`) — compile once on the driver, broadcast the compiled
 closure tree, evaluate per Arrow batch.
 

@@ -139,3 +139,118 @@ def test_null_ok_custom_check_reads_invalid(spark):
         assert rows[1] == (False, 1)
     finally:
         KEYWORD_COMPILERS.pop("gt3Strict", None)
+
+
+# h is bounded by the same document's w: the Variant view rejects $data,
+# so auto dispatch falls back to the Python backend
+DATA_BOUND = {
+    "type": "object",
+    "properties": {"w": {"type": "integer"}, "h": {"type": "integer", "maximum": {"$data": "1/w"}}},
+}
+
+
+def _count_variant_compiles(monkeypatch):
+    from json_schema_clj_spark.plans import variant_compiler
+
+    calls = []
+    real = variant_compiler.compile_for_json
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(variant_compiler, "compile_for_json", counted)
+    return calls
+
+
+def _python_plan(out):
+    return "ArrowEvalPython" in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_variant_rejection_is_memoised(spark, monkeypatch):
+    calls = _count_variant_compiles(monkeypatch)
+    schema = dict(DATA_BOUND, description="rejection memo")
+    df = _df(spark, [{"w": 3, "h": 2}, {"w": 3, "h": 4}])
+    outs = [engine.validate_json_column(df, schema) for _ in range(2)]
+    assert len(calls) == 1
+    for out in outs:
+        assert _python_plan(out)
+        assert [r["valid"] for r in out.collect()] == [True, False]
+
+
+def test_forced_variant_rejection_raises_same_message_when_memoised(spark, monkeypatch):
+    import pytest
+
+    from json_schema_clj_spark.plans.compiler import ColumnBackendUnsupported
+
+    calls = _count_variant_compiles(monkeypatch)
+    schema = dict(DATA_BOUND, description="forced rejection memo")
+    df = _df(spark, [{"w": 3, "h": 2}])
+    raised = []
+    for _ in range(2):
+        with pytest.raises(ColumnBackendUnsupported) as e:
+            engine.validate_json_column(df, schema, force_backend="variant")
+        raised.append(e.value)
+    assert len(calls) == 1
+    assert str(raised[0]) == str(raised[1]) == "$data on the variant backend"
+    assert raised[0] is not raised[1]
+
+
+def test_register_keyword_misses_compile_memo(spark, monkeypatch):
+    from json_schema_clj_spark.plans.compiler import KEYWORD_COMPILERS
+
+    calls = _count_variant_compiles(monkeypatch)
+    schema = dict(DATA_BOUND, description="registry memo")
+    df = _df(spark, [{"w": 3, "h": 2}])
+    engine.validate_json_column(df, schema)
+    engine.register_keyword("memoProbe", column_compiler=lambda *a: None)
+    try:
+        engine.validate_json_column(df, schema)
+        engine.validate_json_column(df, schema)
+    finally:
+        KEYWORD_COMPILERS.pop("memoProbe")
+    assert len(calls) == 2
+
+
+def test_compile_memos_are_bounded(spark):
+    from json_schema_clj_spark.plans import compiler
+
+    df = spark.createDataFrame([(1,)], "a long")
+    jdf = _df(spark, [{"a": 1}])
+    for i in range(compiler.COMPILE_MEMO_SIZE + 3):
+        schema = {"properties": {"a": {"maximum": 1000 + i}}}
+        compiler.compile_for_table(schema, df.schema)
+        engine.validate_json_column(jdf, schema)
+    assert len(compiler._TABLE_COMPILE_CACHE) == compiler.COMPILE_MEMO_SIZE
+    assert len(engine._JSON_COMPILE_CACHE) == compiler.COMPILE_MEMO_SIZE
+
+
+def test_python_backend_result_shape_matches_variant(spark):
+    from json_schema_clj_spark.pyvalidator.udf import validate_json_df
+
+    schema = {"type": "object"}
+    df = spark.createDataFrame([('{"k": 1}',), (None,)], "data_json string")
+    py = engine.validate_json_column(df, schema, force_backend="python")
+    var = engine.validate_json_column(df, schema, force_backend="variant")
+    for name in ("valid", "violations"):
+        assert py.schema[name].dataType == var.schema[name].dataType
+    assert validate_json_df(df, schema).schema["validation"].dataType.fieldNames() == [
+        "valid", "violations",
+    ]
+    assert [r["valid"] for r in py.collect()] == [True, None]
+
+
+def test_malformed_document_is_same_parse_row_on_python_and_variant(spark):
+    schema = {"type": "object", "required": ["k"]}
+    docs = ['{"k": 1}', "{oops", '{"k": 1', "", '{"k": 1,}', "NaN", '{"k": Infinity}']
+    df = spark.createDataFrame(list(enumerate(docs)), "id int, data_json string")
+
+    def rows(backend):
+        out = engine.validate_json_column(df, schema, force_backend=backend)
+        return [(r["valid"], r["violations"]) for r in out.orderBy("id").collect()]
+
+    py, var = rows("python"), rows("variant")
+    assert py == var
+    assert py[0] == (True, [])
+    parse_row = [([], [], "$parse", "malformed JSON", "error")]
+    assert [(v, [tuple(x) for x in viol]) for v, viol in py[1:]] == [(False, parse_row)] * 6

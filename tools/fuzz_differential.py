@@ -10,6 +10,13 @@ it run, comparing per-row validity across:
   3. Arrow-batched Python backend over JSON strings,
   4. Variant backend (skipped per-schema where it raises Unsupported).
 
+Each schema also gets a few truncated or corrupted JSON strings
+(`corrupt`).  On those, the Arrow-batched Python backend and the Variant
+backend must agree on the verdict and on whether the row carries the
+`$parse` violation; where the Variant backend rejects the schema, the
+`$parse` flags are compared against a Variant run of the empty schema
+(the parse verdict does not depend on the schema).
+
 Any disagreement is appended as one JSON line to BENCH/fuzz_findings.jsonl
 with the schema, doc, and per-backend verdicts — enough to replay as a
 fixture.  Exit code is the number of distinct disagreeing schemas.
@@ -98,6 +105,27 @@ def bias_data(schema, rng):
     return schema
 
 
+def corrupt(text, rng):
+    """A truncated or corrupted copy of one JSON document: cut at a random
+    position, or one character dropped, or one replaced by a structural
+    character (the result may still parse; then it is an ordinary doc)."""
+    i = rng.randrange(1, len(text))
+    move = rng.randrange(3)
+    if move == 0:
+        return text[:i]
+    if move == 1:
+        return text[:i] + text[i + 1:]
+    return text[:i] + rng.choice('{}[],:"x') + text[i + 1:]
+
+
+def _verdicts(out):
+    """(valid, has a $parse violation) per row of a validate_json_column result."""
+    return [
+        (r["valid"], any(v["keyword"] == "$parse" for v in r["violations"] or []))
+        for r in out.collect()
+    ]
+
+
 def main() -> int:
     start_seed = int(sys.argv[1]) if len(sys.argv) > 1 else 1
     n_schemas = int(sys.argv[2]) if len(sys.argv) > 2 else 500
@@ -125,6 +153,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     n_rows = 30
+    n_corrupt = 4
     bad_schemas = 0
     for si in range(start_seed, start_seed + n_schemas):
         rng = random.Random(si)
@@ -142,23 +171,28 @@ def main() -> int:
         df = spark.createDataFrame(rows, TABLE_SCHEMA)
         col_valid = [r["valid"] for r in engine.with_validation(df, schema).collect()]
 
-        jdf = spark.createDataFrame([(json.dumps(d),) for d in docs], "data_json string")
-        udf_valid = [
-            r["valid"]
-            for r in engine.validate_json_column(jdf, schema, force_backend="python").collect()
-        ]
+        texts = [json.dumps(d) for d in docs]
+        texts += [corrupt(rng.choice(texts), rng) for _ in range(n_corrupt)]
+        jdf = spark.createDataFrame([(t,) for t in texts], "data_json string")
+        udf = _verdicts(engine.validate_json_column(jdf, schema, force_backend="python"))
 
         try:
-            var_out = engine.validate_json_column(jdf, schema, force_backend="variant")
-            var_valid = [r["valid"] for r in var_out.collect()]
+            var = _verdicts(engine.validate_json_column(jdf, schema, force_backend="variant"))
         except ColumnBackendUnsupported:
-            var_valid = None
+            var = None
+            var_parse = [p for _, p in _verdicts(
+                engine.validate_json_column(jdf, {}, force_backend="variant")
+            )]
 
         schema_bad = False
-        for i, d in enumerate(docs):
-            verdicts = {"py": py_valid[i], "col": col_valid[i], "udf": udf_valid[i]}
-            if var_valid is not None:
-                verdicts["variant"] = var_valid[i]
+        for i, text in enumerate(texts):
+            if i < n_rows:
+                verdicts = {"py": py_valid[i], "col": col_valid[i], "udf": udf[i][0]}
+                if var is not None:
+                    verdicts["variant"] = var[i][0]
+            else:
+                verdicts = {"udf": udf[i]}
+                verdicts["variant"] = var[i] if var is not None else (udf[i][0], var_parse[i])
             if len(set(verdicts.values())) > 1:
                 schema_bad = True
                 with open(FINDINGS, "a") as f:
@@ -167,9 +201,9 @@ def main() -> int:
                             {
                                 "seed": si,
                                 "schema": schema,
-                                "doc": d,
+                                "doc": docs[i] if i < n_rows else text,
                                 "verdicts": verdicts,
-                                "py_errors": v(d)["errors"],
+                                "py_errors": v(docs[i])["errors"] if i < n_rows else None,
                             }
                         )
                         + "\n"
